@@ -308,7 +308,10 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
     )
     from dudb_spark.operators.stats import compute_stats
 
-    t = cat.tables()
+    # ``cat`` memoizes its tables: the caller's handles (the snapshot
+    # diff) are the ones reused here, so no table is opened twice
+    cur_v = cat.latest_version()
+    t = cat.tables(cur_v)
     prev_v = prev_stats.meta["snapshot_version"]
     prev_t = cat.tables(prev_v)
 
@@ -321,15 +324,15 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
     # worse at chain 3; the r11 watch-apply gate blow-up).  Materialize
     # the reconstruction ONCE per fold — localCheckpoint truncates the
     # growing plan too, which is where the time actually goes.  Full
-    # snapshots stay raw parquet scans (nothing to pin).
+    # snapshots stay raw parquet scans (nothing to pin).  Called only
+    # for the frames a plan actually folds: the bucketed closure reads
+    # the raw scans instead.
     def _pin_delta(tbl, ver):
         if ver and cat.is_delta(ver):
             return (tbl.prefixes.localCheckpoint(),
                     tbl.entries.localCheckpoint())
         return tbl.prefixes, tbl.entries
 
-    cur_v = cat.latest_version()
-    t_prefixes, t_entries = _pin_delta(t, cur_v)
     n_touched = touched.count()
     # tree size from snapshot metadata (catalog.prefix_rows): zero jobs,
     # and — critically — no reconstruction of a delta-chain version,
@@ -346,12 +349,12 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
             "plan (--churn-threshold 0 forces the incremental closure)",
             file=sys.stderr,
         )
-        return compute_stats(t_prefixes, t_entries, opts)
+        return compute_stats(*_pin_delta(t, cur_v), opts)
     # both snapshots stored bucketed with the same width → hand the
     # raw (pb-carrying) scans to the closure so its path probes
     # partition-prune to the churn's buckets
     prev_lay = cat.layout(prev_v)
-    cur_lay = cat.layout()
+    cur_lay = cat.layout(cur_v)
     buckets = None
     spill_rows = None
     if (
@@ -364,7 +367,7 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
             # recorded at write time: lets the closure skip its
             # is-the-index-empty probe job
             spill_rows = prev_lay["spill_rows"] + cur_lay["spill_rows"]
-    elif not (cat.is_delta(cat.latest_version())
+    elif not (cat.is_delta(cur_v)
               or (prev_v and cat.is_delta(prev_v))):
         # delta versions are EXPECTED to lack the physical bucketing
         # (the periodic compaction restores it) — only a genuinely
@@ -375,18 +378,17 @@ def _stats_fold_update(cat, prev_stats, touched, opts, churn_threshold,
             " --layout bucketed` to enable pruned probes",
             file=sys.stderr,
         )
-    prev_prefixes, prev_entries = _pin_delta(prev_t, prev_v)
+    if buckets:
+        inputs = (prev_t.read_raw("prefixes"), prev_t.read_raw("entries"),
+                  t.read_raw("prefixes"), t.read_raw("entries"))
+    else:
+        inputs = (*_pin_delta(prev_t, prev_v), *_pin_delta(t, cur_v))
     return incremental_stats(
-        prev_stats,
-        prev_t.read_raw("prefixes") if buckets else prev_prefixes,
-        prev_t.read_raw("entries") if buckets else prev_entries,
-        t.read_raw("prefixes") if buckets else t_prefixes,
-        t.read_raw("entries") if buckets else t_entries,
-        touched, opts,
+        prev_stats, *inputs, touched, opts,
         pin_inputs=False,  # stored snapshot scans — nothing to pin
         path_buckets=buckets,
         prev_spill=cat.spill_index(prev_v) if buckets else None,
-        new_spill=cat.spill_index() if buckets else None,
+        new_spill=cat.spill_index(cur_v) if buckets else None,
         spill_rows=spill_rows,
     )
 
@@ -401,19 +403,17 @@ def _save_stats(res, stats_dir, calculator_name, cat):
         n += 1
         out = os.path.join(stats_dir, f"{when}-{n}")
     when = os.path.basename(out)
-    res.save(out)
+    res.save(out, meta=dict(res.meta, date=when, prefix=res.meta.get("root"),
+                            calculator=calculator_name,
+                            snapshot_version=cat.latest_version()))
     with open(os.path.join(stats_dir, "latest"), "w") as f:
         f.write(when)
-    meta = dict(res.meta, date=when, prefix=res.meta.get("root"),
-                calculator=calculator_name,
-                snapshot_version=cat.latest_version())
-    with open(os.path.join(out, "meta.json"), "w") as f:
-        json.dump(meta, f)
     tot = res.totals().collect()[0].asDict()
     return out, tot
 
 
 def _load_stats(spark, stats_dir):
+    from dudb_spark.model import read_parquet
     from dudb_spark.operators.stats import StatsResult
 
     with open(os.path.join(stats_dir, "latest")) as f:
@@ -421,10 +421,12 @@ def _load_stats(spark, stats_dir):
     base = os.path.join(stats_dir, when)
     with open(os.path.join(base, "meta.json")) as f:
         meta = json.load(f)
+    # schemas recorded by StatsResult.save: no inference job per table
+    # (runs saved before they were recorded fall back to inference)
+    schemas = meta.get("schemas", {})
     return StatsResult(
-        spark.read.parquet(f"{base}/per_prefix.parquet"),
-        spark.read.parquet(f"{base}/per_user.parquet"),
-        spark.read.parquet(f"{base}/per_group.parquet"),
+        *(read_parquet(spark, f"{base}/{t}.parquet", schemas.get(t))
+          for t in ("per_prefix", "per_user", "per_group")),
         meta,
     )
 
@@ -550,7 +552,11 @@ def _watch_land(spark, cat, args, diff, stats_dir) -> bool:
     stream's per-batch apply and --full-resync's pre-stream
     reconciliation.  Returns True when the diff had any effect."""
     from dudb_spark.operators.ingest import apply_changes
+    from dudb_spark.sources.catalog import SnapshotCatalog
 
+    # a fresh catalog per batch: its table memo must not outlive the
+    # batch, or a long watch would hold a handle for every version
+    cat = SnapshotCatalog(spark, cat.root)
     applied_from = cat.latest_version()
     t = cat.tables()
     res = apply_changes(t.prefixes, t.entries, diff, root=args.prefix)

@@ -33,7 +33,13 @@ from typing import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from dudb_spark.model import MODE_DIR, MODE_EXEC_ANY, MODE_SYMLINK
+from dudb_spark.model import (
+    MODE_DIR,
+    MODE_EXEC_ANY,
+    MODE_SYMLINK,
+    S_IFLNK,
+    S_IFMT,
+)
 
 # --------------------------------------------------------------------------
 # Tokenizer
@@ -335,6 +341,16 @@ class ExprCompiler:
             return F.col("is_dir")
         return F.lit(True)
 
+    @staticmethod
+    def _is_symlink() -> Column:
+        """Symlink test over either stored ``mode`` encoding: Go's
+        fs.ModeSymlink bit, or a POSIX ``st_mode`` (the local crawler's)
+        whose type field is S_IFLNK."""
+        mode = F.col("mode")
+        return (mode.bitwiseAND(F.lit(MODE_SYMLINK)) != 0) | (
+            mode.bitwiseAND(F.lit(S_IFMT)) == F.lit(S_IFLNK)
+        )
+
     # term compilation --------------------------------------------------
 
     def term(self, t: Term) -> Column:
@@ -356,11 +372,10 @@ class ExprCompiler:
             if v == "d":
                 return self._is_dir()
             if v == "l":
-                return F.col("mode").bitwiseAND(F.lit(MODE_SYMLINK)) != 0
+                return self._is_symlink()
             if v == "f":
                 return (
-                    (~self._is_dir())
-                    & (F.col("mode").bitwiseAND(F.lit(MODE_SYMLINK)) == 0)
+                    (~self._is_dir()) & ~self._is_symlink()
                     if self.mode == "entry"
                     else F.lit(False)
                 )

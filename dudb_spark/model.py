@@ -117,6 +117,27 @@ GROUPS_SCHEMA = T.StructType(
 MODE_DIR = 1 << 31  # fs.ModeDir
 MODE_SYMLINK = 1 << 27  # fs.ModeSymlink
 MODE_EXEC_ANY = 0o111  # any execute bit
+# The local crawler stores POSIX ``st_mode`` instead (file type in bits
+# 12–15).  Go's FileMode never sets those bits, so a value whose type
+# field reads as a symlink can only be a POSIX mode.
+S_IFMT = 0o170000
+S_IFLNK = 0o120000
+
+
+def schema_ddl(schema: T.StructType) -> str:
+    """Compact DDL of ``schema`` with every field nullable — the form
+    ``spark.read.parquet`` infers, so passing it to ``spark.read.schema``
+    opens the table exactly as inference would, without the footer job."""
+    return ", ".join(
+        "`{}` {}".format(f.name.replace("`", "``"), f.dataType.simpleString())
+        for f in schema.fields
+    )
+
+
+def read_parquet(spark, path: str, ddl: str | None = None):
+    """``spark.read.parquet(path)``, opened with ``ddl`` (a schema recorded
+    at write time) when there is one, so no inference job runs."""
+    return (spark.read.schema(ddl) if ddl else spark.read).parquet(path)
 
 
 class FsTables:
@@ -126,9 +147,13 @@ class FsTables:
 
     TABLE_NAMES = ("prefixes", "entries", "errors", "scan_logs", "users", "groups")
 
-    def __init__(self, spark, root: str):
+    def __init__(self, spark, root: str, schemas: dict | None = None):
         self.spark = spark
         self.root = root.rstrip("/")
+        # table -> DDL recorded at write time (``_layout.json``); tables
+        # without one fall back to schema inference
+        self.schemas = schemas or {}
+        self._raw: dict = {}
 
     def path(self, table: str) -> str:
         return f"{self.root}/{table}.parquet"
@@ -137,14 +162,23 @@ class FsTables:
         """Logical table view: physical layout columns (the ``pb`` path
         bucket a bucketed snapshot is partitioned by) are dropped so
         consumers see the same schema regardless of storage layout."""
-        df = self.spark.read.parquet(self.path(table))
+        df = self.read_raw(table)
         return df.drop("pb") if "pb" in df.columns else df
 
     def read_raw(self, table: str):
         """Physical view: keeps layout columns (``pb``) so layout-aware
         readers — the incremental-stats closure probes — can prune
-        partitions."""
-        return self.spark.read.parquet(self.path(table))
+        partitions.
+
+        Each table is opened once per handle.  With a recorded schema the
+        open submits no Spark job: no footer read for inference, and the
+        session lists bucket directories on the driver."""
+        df = self._raw.get(table)
+        if df is None:
+            df = self._raw[table] = read_parquet(
+                self.spark, self.path(table), self.schemas.get(table)
+            )
+        return df
 
     @property
     def prefixes(self):

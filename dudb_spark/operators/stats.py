@@ -55,6 +55,7 @@ non-duplicate matching directories.
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass, field
 from itertools import count
 from typing import Callable
@@ -64,6 +65,7 @@ from pyspark.sql import functions as F
 
 from dudb_spark.functions.boolexpr import compile_expr
 from dudb_spark.functions.calculators import identity
+from dudb_spark.model import schema_ddl
 from dudb_spark.operators.find import subtree_pred
 
 METRICS = ("bytes", "storage_bytes", "prefix_bytes", "files", "sub_prefixes")
@@ -196,11 +198,18 @@ class StatsResult:
             cand = cand.union(t)
         return pp.join(F.broadcast(cand.distinct()), "prefix", "left_semi")
 
-    def save(self, out_dir: str) -> None:
-        """Persist summary tables (S10 stand-in for the .idustats snapshot)."""
-        self.per_prefix.write.mode("overwrite").parquet(f"{out_dir}/per_prefix.parquet")
-        self.per_user.write.mode("overwrite").parquet(f"{out_dir}/per_user.parquet")
-        self.per_group.write.mode("overwrite").parquet(f"{out_dir}/per_group.parquet")
+    def save(self, out_dir: str, meta: dict | None = None) -> None:
+        """Persist summary tables (S10 stand-in for the .idustats snapshot)
+        and ``meta.json``: ``meta`` (default :attr:`meta`) plus each
+        table's schema, so loading them needs no inference job."""
+        schemas = {}
+        for name in ("per_prefix", "per_user", "per_group"):
+            df = getattr(self, name)
+            df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+            schemas[name] = schema_ddl(df.schema)
+        meta = dict(self.meta if meta is None else meta, schemas=schemas)
+        with open(f"{out_dir}/meta.json", "w") as f:
+            json.dump(meta, f)
 
 
 def compute_stats(

@@ -19,11 +19,29 @@ import os
 from pyspark.sql import SparkSession
 
 _LOCAL_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _default_driver_mem() -> str:
+    """min(16g, half of physical RAM), in whole gigabytes (at least 1).
+
+    The JVM's heap is only part of its footprint (metaspace, code cache,
+    direct buffers, the Python workers beside it), so a heap sized to all
+    of RAM gets the JVM killed by the kernel on a small host instead of
+    failing with a catchable OutOfMemoryError."""
+    try:
+        mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):  # no sysconf (Windows)
+        return "16g"
+    return f"{max(1, min(16, mem // 2 // (1 << 30)))}g"
+
+
 # local mode runs driver + all executor threads in ONE JVM; the 1g default
 # heap OOMs with 32 concurrent tasks over array-heavy expressions.  Only
 # applied at JVM launch (no effect on an already-running session or on a
 # real cluster submit, which sets its own memory).
-_LOCAL_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+_LOCAL_DRIVER_MEM = (
+    os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+)
 # AQE partition coalescing, sized to DATA not core count (guide §2.2).
 # parallelismFirst=true (Spark's default) coalesces tiny shuffles only
 # down to minPartitionSize (1 MB) chunks "to maximize parallelism" — on
@@ -80,6 +98,19 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- scan sizing: parquet splits sized for executor memory ------
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # --- file listing on the driver ---------------------------------
+        # A path with more child directories than this threshold is
+        # listed by a Spark job (one task per directory); below it the
+        # driver lists them itself.  A bucketed snapshot table has one
+        # `pb=` directory per bucket (64 by default, CLI --path-buckets),
+        # and on a local or HDFS filesystem listing those on the driver
+        # takes milliseconds where the job costs ~0.3 s — paid on every
+        # table open.  On an object store, where each LIST is a network
+        # round trip, a deployment with many more buckets (or
+        # Hive-style partitions) should lower this so listing fans out
+        # to the executors again.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "256")
         # --- keep the driver UI off in tests/benchmarks -----------------
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")

@@ -14,13 +14,27 @@ from __future__ import annotations
 
 import os
 
-from dudb_spark.model import FsTables, SCAN_LOGS_SCHEMA
+from dudb_spark.model import (
+    FsTables,
+    SCAN_LOGS_SCHEMA,
+    read_parquet,
+    schema_ddl,
+)
 
 
 class SnapshotCatalog:
+    """One command's view of a metadata DB.
+
+    :meth:`tables` opens each version at most once per catalog instance,
+    so a command that reads the same snapshot in several places (``stats
+    compute --incremental``: diff, refold gate, closure) pays one open.
+    The memo lives only as long as the instance; commands build their
+    own catalog."""
+
     def __init__(self, spark, db_root: str):
         self.spark = spark
         self.root = db_root.rstrip("/")
+        self._tables: dict = {}  # version -> FsTables | DeltaTables
 
     # -- versions -------------------------------------------------------
 
@@ -66,9 +80,17 @@ class SnapshotCatalog:
                 raise FileNotFoundError(f"no snapshot under {self.root}")
         elif version not in self.versions():
             raise FileNotFoundError(f"no version {version} under {self.root}")
-        if self.is_delta(version):
-            return DeltaTables(self.spark, self, version)
-        return FsTables(self.spark, os.path.join(self.root, version))
+        t = self._tables.get(version)
+        if t is None:
+            t = self._tables[version] = (
+                DeltaTables(self.spark, self, version)
+                if self.is_delta(version)
+                else FsTables(
+                    self.spark, os.path.join(self.root, version),
+                    self.layout(version).get("schemas"),
+                )
+            )
+        return t
 
     # -- writes ---------------------------------------------------------
 
@@ -88,15 +110,20 @@ class SnapshotCatalog:
         ``_layout.json`` so readers (CLI ``stats --incremental``) can
         discover them.  Purely a writer-side choice — ``tables()`` hides
         the ``pb`` column, so every non-layout-aware consumer sees the
-        identical logical schema."""
-        import json as _json
+        identical logical schema.
 
+        ``_layout.json`` also records every written table's schema, so
+        :meth:`tables` opens them without a schema-inference job."""
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         v = self.next_version()
         out = os.path.join(self.root, v)
+        schemas: dict[str, str] = {}
 
-        def _write(df, probe_col, dest):
+        def _write(df, probe_col, table):
+            dest = f"{out}/{table}.parquet"
+            schema = df.schema
             if layout == "bucketed":
                 (
                     df.withColumn(
@@ -111,13 +138,20 @@ class SnapshotCatalog:
                     .partitionBy("pb")
                     .parquet(dest)
                 )
+                # partition columns come last in the inferred schema
+                schema = T.StructType(
+                    schema.fields + [T.StructField("pb", T.IntegerType())]
+                )
             else:
                 df.write.mode("overwrite").parquet(dest)
+            schemas[table] = schema_ddl(schema)
 
-        _write(prefixes, "path", f"{out}/prefixes.parquet")
-        _write(entries, "parent", f"{out}/entries.parquet")
+        _write(prefixes, "path", "prefixes")
+        _write(entries, "parent", "entries")
         if errors is not None:
             errors.write.mode("overwrite").parquet(f"{out}/errors.parquet")
+            schemas["errors"] = schema_ddl(errors.schema)
+        meta: dict = {"layout": "plain"}
         if layout == "bucketed":
             # hardlink SPILL INDEX: (device, inode, pb) of every key
             # whose member rows SPAN ≥2 distinct buckets, plus every
@@ -147,8 +181,9 @@ class SnapshotCatalog:
             # (and prunes to) this tiny subset — a plain directory's two
             # rows (own record + entry in parent) make it a spill key
             # but NOT a rec key.
-            p = self.spark.read.parquet(f"{out}/prefixes.parquet")
-            e = self.spark.read.parquet(f"{out}/entries.parquet")
+            written = FsTables(self.spark, out, schemas)
+            p = written.read_raw("prefixes")
+            e = written.read_raw("entries")
             rows = p.select(
                 "device", "inode", "pb", F.lit(True).alias("_isrec")
             ).unionByName(
@@ -165,49 +200,42 @@ class SnapshotCatalog:
                 .where("_npb > 1 OR _rc >= 2")
                 .select("device", "inode", (F.col("_rc") >= 2).alias("rec"))
             )
-            (
+            spill = (
                 rows.select("device", "inode", "pb")
                 .join(keyinfo, ["device", "inode"])
                 .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{out}/hlinks.parquet")
             )
+            spill.write.mode("overwrite").parquet(f"{out}/hlinks.parquet")
+            schemas["hlinks"] = schema_ddl(spill.schema)
             # row count recorded so readers can skip the is-it-empty
             # probe job (incremental_stats(spill_rows=...))
-            n_spill = self.spark.read.parquet(
-                f"{out}/hlinks.parquet"
-            ).count()
-            with open(os.path.join(out, "_layout.json"), "w") as f:
-                _json.dump(
-                    {
-                        "layout": "bucketed",
-                        "path_buckets": path_buckets,
-                        "spill_rows": n_spill,
-                        "prefix_rows": self._count_written_prefixes(out),
-                    },
-                    f,
-                )
-        else:
-            # plain layout still records the tree size: readers (the
-            # stats refold gate) need it without counting reconstructed
-            # frames, and for a delta CHAIN the count would otherwise
-            # execute the full reconstruction join per watch batch
-            with open(os.path.join(out, "_layout.json"), "w") as f:
-                _json.dump(
-                    {
-                        "layout": "plain",
-                        "prefix_rows": self._count_written_prefixes(out),
-                    },
-                    f,
-                )
+            meta = {
+                "layout": "bucketed",
+                "path_buckets": path_buckets,
+                "spill_rows": self._count_rows(out, "hlinks"),
+            }
+        # every layout records the tree size: readers (the stats refold
+        # gate) need it without counting reconstructed frames, and for a
+        # delta CHAIN the count would otherwise execute the full
+        # reconstruction join per watch batch
+        self._write_layout(out, meta, schemas)
         os.makedirs(self.root, exist_ok=True)
         with open(os.path.join(self.root, "latest"), "w") as f:
             f.write(v)
         return out
 
-    def _count_written_prefixes(self, out: str) -> int:
-        """Row count of a just-written prefixes table — parquet footer
-        metadata read driver-side with pyarrow, no Spark job.  (Was a
+    def _write_layout(self, out: str, meta: dict, schemas: dict) -> None:
+        import json as _json
+
+        meta = dict(meta, prefix_rows=self._count_rows(out, "prefixes"),
+                    schemas=schemas)
+        with open(os.path.join(out, "_layout.json"), "w") as f:
+            _json.dump(meta, f)
+
+    @staticmethod
+    def _count_rows(out: str, table: str) -> int:
+        """Row count of a just-written table — parquet footer metadata
+        read driver-side with pyarrow, no Spark job.  (Was a
         ``spark.read.parquet(...).count()``: metadata-only at the scan
         level but still a full job submission + file-index build, ~0.2 s
         per snapshot write — measured while profiling q91, which pays
@@ -218,7 +246,7 @@ class SnapshotCatalog:
         return sum(
             pq.read_metadata(f).num_rows
             for f in _glob(
-                os.path.join(out, "prefixes.parquet", "**", "*.parquet"),
+                os.path.join(out, f"{table}.parquet", "**", "*.parquet"),
                 recursive=True,
             )
         )
@@ -414,10 +442,14 @@ class SnapshotCatalog:
         )
         if p is None or not os.path.isdir(os.path.join(p, "hlinks.parquet")):
             return None
-        return self.spark.read.parquet(os.path.join(p, "hlinks.parquet"))
+        return read_parquet(
+            self.spark, os.path.join(p, "hlinks.parquet"),
+            self.layout(version).get("schemas", {}).get("hlinks"),
+        )
 
     def layout(self, version: str | None = None) -> dict:
-        """Layout metadata of a snapshot version ({} for plain layouts)."""
+        """Layout metadata of a snapshot version (``_layout.json``; {} for
+        delta versions and for snapshots written before it existed)."""
         import json as _json
 
         p = (
@@ -443,7 +475,8 @@ class SnapshotCatalog:
         is the `OPTIMIZE ... ZORDER`-analog that restores it (the reference
         gets the same property for free from Badger's sorted LSM keys,
         badgerdb.go:307–317).  Readers are unaffected: the pointer flips
-        only after a complete write."""
+        only after a complete write.  The new version records plain-layout
+        metadata (tree size, schemas), so it opens without Spark jobs."""
         t = self.tables()
         shuffle = int(
             self.spark.conf.get("spark.sql.shuffle.partitions", "32")
@@ -463,8 +496,14 @@ class SnapshotCatalog:
             .write.mode("overwrite")
             .parquet(f"{out}/entries.parquet")
         )
+        schemas = {
+            "prefixes": schema_ddl(t.prefixes.schema),
+            "entries": schema_ddl(t.entries.schema),
+        }
         if os.path.isdir(f"{self.latest_path()}/errors.parquet"):
             t.errors.write.mode("overwrite").parquet(f"{out}/errors.parquet")
+            schemas["errors"] = schema_ddl(t.errors.schema)
+        self._write_layout(out, {"layout": "plain"}, schemas)
         with open(os.path.join(self.root, "latest"), "w") as f:
             f.write(v)
         return out
@@ -490,6 +529,7 @@ class SnapshotCatalog:
         ]
         for v in removable:
             shutil.rmtree(os.path.join(self.root, v))
+            self._tables.pop(v, None)
         # the watch-seed artifact (:meth:`watch_seed`) rides its version:
         # drop it alongside, and also when its version is simply no
         # longer latest (a watcher restart would rebuild it anyway)
@@ -535,7 +575,7 @@ class DeltaTables:
             meta = cat.delta_meta(v)
             chain.append((os.path.join(cat.root, v), meta["root"]))
             v = meta["parent"]
-        base = FsTables(spark, os.path.join(cat.root, v))
+        base = cat.tables(v)
         self._base = base
         from dudb_spark.operators.ingest import apply_changes
 

@@ -139,3 +139,30 @@ def test_empty_expression_defaults(spark, fs_dir):
         t.entries.count()
     )
     assert t.entries.where(compile_expr("", "entry", empty_value=False)).count() == 0
+
+
+def test_type_operand_on_crawled_tree(spark, tmp_path):
+    """``crawl_local`` stores POSIX ``st_mode`` where the model's
+    fixtures use Go FileMode bits; ``type=l``/``type=f`` read both."""
+    import os
+
+    from dudb_spark.model import ENTRIES_SCHEMA, PREFIXES_SCHEMA
+    from dudb_spark.operators.find import find
+    from dudb_spark.sources.crawler import crawl_local
+
+    root = tmp_path / "tree"
+    (root / "d").mkdir(parents=True)
+    (root / "f.txt").write_text("x")
+    os.symlink("f.txt", root / "link")
+    os.symlink("d", root / "dlink")
+    prows, erows, _ = crawl_local(str(root))
+    p = spark.createDataFrame(prows, PREFIXES_SCHEMA)
+    e = spark.createDataFrame(erows, ENTRIES_SCHEMA)
+
+    def names(expr):
+        return sorted(os.path.basename(r.path) for r in
+                      find(p, e, root=str(root), expr=expr).collect())
+
+    assert names("type=l") == ["dlink", "link"]
+    assert names("type=f") == ["f.txt"]
+    assert names("!type=l && !type=d") == ["f.txt"]
