@@ -64,7 +64,12 @@ def _exclude_regex(patterns) -> str | None:
 
 
 def cmd_analyze(args):
-    from dudb_spark.model import ERRORS_SCHEMA, ENTRIES_SCHEMA, PREFIXES_SCHEMA
+    from dudb_spark.model import (
+        ERRORS_SCHEMA,
+        ENTRIES_SCHEMA,
+        PREFIXES_SCHEMA,
+        driver_frame,
+    )
     from dudb_spark.sources.crawler import crawl_local
 
     spark = _spark()
@@ -104,9 +109,11 @@ def cmd_analyze(args):
             args.prefix, exclusions=args.exclude or [],
             concurrent_scans=args.scans,
         )
-        staged_p = spark.createDataFrame(prows, PREFIXES_SCHEMA)
-        staged_e = spark.createDataFrame(erows, ENTRIES_SCHEMA)
-        errors = spark.createDataFrame(errrows or [], ERRORS_SCHEMA)
+        # Arrow-staged: the merge and the writes scan these frames
+        # several times, and none of those scans needs a Python worker
+        staged_p = driver_frame(spark, prows, PREFIXES_SCHEMA)
+        staged_e = driver_frame(spark, erows, ENTRIES_SCHEMA)
+        errors = driver_frame(spark, errrows, ERRORS_SCHEMA)
         _analyze_body(
             spark, args, start, staged_p, staged_e, errors,
             counts=(
@@ -156,12 +163,27 @@ def _analyze_body(
             "errors": n_errors,
         }
     else:
-        prev = cat.tables()
+        prev_v = cat.latest_version()
+        prev = cat.tables(prev_v)
+        bucketed = lay["layout"] == "bucketed"
         res = merge_scan(
             prev.prefixes, prev.entries, staged_p, staged_e,
             root=args.prefix, force=getattr(args, "force", False),
+            path_buckets=args.path_buckets if bucketed else None,
         )
-        out = cat.write_snapshot(res.prefixes, res.entries, errors, **lay)
+        # copy-on-write: rewrite only the buckets of the paths the merge
+        # touched and share the rest with the previous version, when
+        # that version is a full snapshot of the same bucketed layout;
+        # anything else (plain, a delta, another width or schema) is a
+        # full write
+        base = (
+            (prev_v, res.changed_buckets)
+            if bucketed and cat.shares_buckets(
+                prev_v, args.path_buckets, res.prefixes, res.entries)
+            else None
+        )
+        out = cat.write_snapshot(res.prefixes, res.entries, errors,
+                                 base=base, **lay)
         summary = dict(res.summary, errors=n_errors)
     stop = datetime.now(timezone.utc)
     summary["duration_ns"] = int((stop - start).total_seconds() * 1e9)

@@ -23,6 +23,10 @@ prune row groups via min/max stats; locally we rely on predicate pushdown.
 
 from __future__ import annotations
 
+from datetime import timezone
+from functools import lru_cache
+
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 PREFIXES_SCHEMA = T.StructType(
@@ -132,6 +136,56 @@ def schema_ddl(schema: T.StructType) -> str:
         "`{}` {}".format(f.name.replace("`", "``"), f.dataType.simpleString())
         for f in schema.fields
     )
+
+
+def path_bucket(col, n: int):
+    """Layout bucket of a probe path: ``pmod(xxhash64(col), n)`` as int.
+
+    The one definition of the bucketed layout's hash.  The snapshot
+    writer partitions by it, the copy-on-write write derives its changed
+    buckets from it, and the incremental closure prunes its probes with
+    it, so the three always agree on which ``pb=`` directory holds a
+    path."""
+    return F.pmod(F.xxhash64(col), F.lit(n)).cast("int")
+
+
+@lru_cache(maxsize=None)
+def ddl_struct(ddl: str) -> T.StructType:
+    """A DDL schema string parsed into a ``StructType`` (once per
+    process and string; parsing needs a running SparkContext)."""
+    return T._parse_datatype_string(ddl)
+
+
+def driver_frame(spark, rows: list, schema):
+    """DataFrame from rows built on the driver (dicts by field name, or
+    tuples in schema order), staged through a ``pyarrow.Table``.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the rows as a
+    Python RDD, so every job that scans the frame starts Python workers
+    to deserialize them.  An Arrow table is shipped to the JVM once and
+    scanned there.  ``schema`` is a ``StructType`` or a DDL string.
+    Naive datetimes are local time, as ``createDataFrame`` reads them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = ddl_struct(schema)
+    aschema = to_arrow_schema(schema)
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(n) for r in rows] for n in schema.names]
+    else:
+        cols = [list(c) for c in zip(*rows)] or [[] for _ in schema.names]
+    for i, f in enumerate(schema.fields):
+        if isinstance(f.dataType, T.TimestampType):
+            cols[i] = [
+                v if v is None or v.tzinfo else v.astimezone(timezone.utc)
+                for v in cols[i]
+            ]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, aschema.types)],
+        schema=aschema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def read_parquet(spark, path: str, ddl: str | None = None):

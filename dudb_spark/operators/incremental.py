@@ -64,6 +64,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dudb_spark.model import path_bucket
 from dudb_spark.operators.stats import StatsOptions, StatsResult, compute_stats
 
 _KEY = ["device", "inode"]
@@ -216,9 +217,6 @@ def incremental_stats(
                     "(SnapshotCatalog.write_snapshot(layout='bucketed'))"
                 )
 
-    def _pb(col):
-        return F.pmod(F.xxhash64(col), F.lit(path_buckets)).cast("int")
-
     def _buckets(paths: DataFrame) -> list:
         """Distinct layout buckets of a churn-bounded path set (collected
         driver-side: at most ``path_buckets`` ints, from a frame bounded
@@ -226,7 +224,9 @@ def incremental_stats(
         convergence check)."""
         return _tr("bucket collect", lambda: [
             r[0]
-            for r in paths.select(_pb(F.col("path")).alias("b"))
+            for r in paths.select(
+                path_bucket(F.col("path"), path_buckets).alias("b")
+            )
             .distinct()
             .collect()
         ])
@@ -473,7 +473,8 @@ def incremental_stats(
                 _tr("parent buckets", lambda: [
                     r[0]
                     for r in fold_entries.select(
-                        _pb(F.col("parent")).alias("b")
+                        path_bucket(F.col("parent"), path_buckets)
+                        .alias("b")
                     )
                     .distinct()
                     .collect()

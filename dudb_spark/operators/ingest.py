@@ -33,6 +33,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dudb_spark.model import path_bucket
 from dudb_spark.operators.find import subtree_pred
 
 
@@ -51,6 +52,12 @@ class MergeResult:
     # apply_changes per micro-batch, forever) must release() AFTER
     # consuming/writing the result or executor storage grows per batch
     cached: tuple = ()
+    # layout buckets (model.path_bucket) of the touched paths, when
+    # merge_scan was given path_buckets and a summary: outside them the
+    # merged tables equal the previous snapshot's buckets row for row,
+    # which is what lets the writer share those buckets' files
+    # (SnapshotCatalog.write_snapshot(base=...))
+    changed_buckets: list | None = None
 
     def release(self) -> None:
         for df in self.cached:
@@ -65,6 +72,7 @@ def merge_scan(
     root: str = "",
     with_summary: bool = True,
     force: bool = False,
+    path_buckets: int | None = None,
 ) -> MergeResult:
     """Merge a staged (fresh) scan of ``root`` into the previous snapshot.
 
@@ -89,6 +97,13 @@ def merge_scan(
     for callers that apply many merges in a loop (the streaming-upsert
     composition) and only read the final state, the per-merge counters
     are pure overhead.
+
+    ``path_buckets`` (with the summary) also returns the layout buckets
+    of the touched paths in ``changed_buckets``, taken in the same
+    aggregate job.  Prefix rows are bucketed by ``path`` and entry rows
+    by ``parent``, and the merge rewrites only the prefix rows of
+    touched paths and the entry rows whose parent is touched, so every
+    other bucket is identical to the previous snapshot's.
     """
     in_root_prev = prev_prefixes.where(subtree_pred(F.col("path"), root))
     out_root_prev = prev_prefixes.where(~subtree_pred(F.col("path"), root))
@@ -116,6 +131,13 @@ def merge_scan(
         # 4×; at ingest scale the classification is the expensive part).
         # count(when) rather than sum(when) so empty inputs yield 0, not
         # NULL.
+        bucket_set = (
+            [F.collect_set(
+                F.when(~F.col("unchanged"),
+                       path_bucket(F.col("path"), path_buckets))
+            ).alias("buckets")]
+            if path_buckets is not None else []
+        )
         c = j.agg(
             F.count(F.when(F.expr("in_new AND NOT in_old"), 1)).alias("n_new"),
             F.count(F.when(F.col("unchanged"), 1)).alias("n_unchanged"),
@@ -125,6 +147,7 @@ def merge_scan(
             F.count(
                 F.when(F.expr("in_old AND NOT in_new"), 1)
             ).alias("n_deleted"),
+            *bucket_set,
         ).first()
         n_new, n_unchanged, n_changed, n_deleted = (
             c["n_new"], c["n_unchanged"], c["n_changed"], c["n_deleted"],
@@ -167,8 +190,13 @@ def merge_scan(
     else:
         summary = None
     touched = j.where(~F.col("unchanged")).select("path")
-    return MergeResult(new_prefixes, new_entries, summary, touched,
-                       cached=(j,))
+    return MergeResult(
+        new_prefixes, new_entries, summary, touched, cached=(j,),
+        changed_buckets=(
+            c["buckets"]
+            if with_summary and path_buckets is not None else None
+        ),
+    )
 
 
 def snapshot_diff(

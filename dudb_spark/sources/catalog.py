@@ -13,13 +13,45 @@ Delta/Iceberg and keeps the same interface).
 from __future__ import annotations
 
 import os
+import shutil
 
 from dudb_spark.model import (
     FsTables,
     SCAN_LOGS_SCHEMA,
+    driver_frame,
+    path_bucket,
     read_parquet,
     schema_ddl,
 )
+
+
+def _bucketed_ddl(schema) -> str:
+    """Recorded DDL of a table written in the bucketed layout: the
+    frame's columns, then the ``pb`` partition column, which Spark lists
+    last when it discovers partitions."""
+    from pyspark.sql import types as T
+
+    return schema_ddl(
+        T.StructType(schema.fields + [T.StructField("pb", T.IntegerType())])
+    )
+
+
+def _share_buckets(src: str, dest: str, skip) -> None:
+    """Give table directory ``dest`` every ``pb=K`` bucket directory of
+    ``src`` whose K is not in ``skip``, file for file (``.crc`` files
+    too).  Files are hard-linked, so both versions own the same bytes and
+    deleting either one leaves the other intact; where linking fails
+    (another device, a filesystem without hard links) they are copied."""
+    for d in os.listdir(src):
+        if not d.startswith("pb=") or int(d[3:]) in skip:
+            continue
+        sd, dd = os.path.join(src, d), os.path.join(dest, d)
+        os.makedirs(dd)
+        for name in os.listdir(sd):
+            try:
+                os.link(os.path.join(sd, name), os.path.join(dd, name))
+            except OSError:
+                shutil.copy2(os.path.join(sd, name), os.path.join(dd, name))
 
 
 class SnapshotCatalog:
@@ -97,6 +129,7 @@ class SnapshotCatalog:
     def write_snapshot(
         self, prefixes, entries, errors=None,
         layout: str | None = None, path_buckets: int = 64,
+        base: tuple | None = None,
     ) -> str:
         """Write the next snapshot version.
 
@@ -113,38 +146,54 @@ class SnapshotCatalog:
         identical logical schema.
 
         ``_layout.json`` also records every written table's schema, so
-        :meth:`tables` opens them without a schema-inference job."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+        :meth:`tables` opens them without a schema-inference job.
 
+        ``base=(version, changed_buckets)`` makes a bucketed write
+        copy-on-write: only the rows whose ``pb`` is in
+        ``changed_buckets`` are written, and every other bucket directory
+        is filled with ``version``'s files (hard links, copies where
+        linking fails).  The caller guarantees that outside
+        ``changed_buckets`` both tables equal ``version``'s row for row,
+        and that ``version`` is a full bucketed snapshot of the same
+        width and schemas (:meth:`shares_buckets`).  The result is an
+        ordinary full snapshot; without ``base`` every bucket is
+        written."""
+        from pyspark.sql import functions as F
+
+        if base is not None and layout != "bucketed":
+            raise ValueError("base= needs layout='bucketed'")
         v = self.next_version()
         out = os.path.join(self.root, v)
         schemas: dict[str, str] = {}
+        changed = (
+            sorted(base[1]) if base is not None else range(path_buckets)
+        )
 
         def _write(df, probe_col, table):
             dest = f"{out}/{table}.parquet"
-            schema = df.schema
-            if layout == "bucketed":
+            if layout != "bucketed":
+                df.write.mode("overwrite").parquet(dest)
+                schemas[table] = schema_ddl(df.schema)
+                return
+            schemas[table] = _bucketed_ddl(df.schema)
+            df = df.withColumn("pb", path_bucket(F.col(probe_col),
+                                                 path_buckets))
+            if len(changed) < path_buckets:
+                df = df.where(F.col("pb").isin(list(changed)))
+            if changed:
                 (
-                    df.withColumn(
-                        "pb",
-                        F.pmod(
-                            F.xxhash64(F.col(probe_col)),
-                            F.lit(path_buckets),
-                        ).cast("int"),
-                    )
-                    .repartition(path_buckets, "pb")
+                    df.repartition(len(changed), "pb")
                     .write.mode("overwrite")
                     .partitionBy("pb")
                     .parquet(dest)
                 )
-                # partition columns come last in the inferred schema
-                schema = T.StructType(
-                    schema.fields + [T.StructField("pb", T.IntegerType())]
-                )
             else:
-                df.write.mode("overwrite").parquet(dest)
-            schemas[table] = schema_ddl(schema)
+                os.makedirs(dest)
+            if base is not None:
+                _share_buckets(
+                    os.path.join(self.root, base[0], f"{table}.parquet"),
+                    dest, set(changed),
+                )
 
         _write(prefixes, "path", "prefixes")
         _write(entries, "parent", "entries")
@@ -224,6 +273,23 @@ class SnapshotCatalog:
             f.write(v)
         return out
 
+    def shares_buckets(self, version: str, path_buckets: int,
+                       prefixes, entries) -> bool:
+        """True when a bucketed write of ``prefixes``/``entries`` at
+        ``path_buckets`` may take ``version``'s unchanged bucket files
+        (``write_snapshot(base=...)``): ``version`` is a full bucketed
+        snapshot, not a delta, of the same width, whose recorded schemas
+        equal the new frames'."""
+        if self.is_delta(version):
+            return False
+        lay = self.layout(version)
+        if (lay.get("layout") != "bucketed"
+                or lay.get("path_buckets") != path_buckets):
+            return False
+        rec = lay.get("schemas") or {}
+        return (rec.get("prefixes") == _bucketed_ddl(prefixes.schema)
+                and rec.get("entries") == _bucketed_ddl(entries.schema))
+
     def _write_layout(self, out: str, meta: dict, schemas: dict) -> None:
         import json as _json
 
@@ -290,7 +356,6 @@ class SnapshotCatalog:
         it; the build is write-to-tmp + rename, so a crashed export can
         never be mistaken for a valid seed."""
         import json as _json
-        import shutil
 
         from pyspark.sql import functions as F
 
@@ -369,6 +434,9 @@ class SnapshotCatalog:
         changes.write.mode("overwrite").parquet(
             os.path.join(out, "delta.parquet")
         )
+        # the feed's schema, so DeltaTables opens delta.parquet without a
+        # footer-inference job
+        schema = schema_ddl(changes.schema)
         # running tree size (base ± dir churn, one churn-sized agg job):
         # the stats refold gate reads this instead of counting the
         # reconstructed prefixes frame (which would execute the full
@@ -406,7 +474,7 @@ class SnapshotCatalog:
         with open(os.path.join(out, "_delta.json"), "w") as f:
             _json.dump(
                 {"parent": parent, "root": root,
-                 "prefix_rows": prefix_rows},
+                 "prefix_rows": prefix_rows, "schema": schema},
                 f,
             )
         with open(os.path.join(self.root, "latest"), "w") as f:
@@ -513,8 +581,6 @@ class SnapshotCatalog:
         one ``latest`` points to, nor any full snapshot / intermediate
         delta a KEPT delta version still reconstructs through).
         Returns the removed version names."""
-        import shutil
-
         keep = max(keep, 1)
         vs = self.versions()
         current = self.latest_version()
@@ -550,11 +616,12 @@ class SnapshotCatalog:
             "stop": stop,
             "summary": {k: v for k, v in summary.items() if k in known},
         }
-        df = self.spark.createDataFrame([row], SCAN_LOGS_SCHEMA)
+        df = driver_frame(self.spark, [row], SCAN_LOGS_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(f"{self.root}/scan_logs.parquet")
 
     def logs(self):
-        return self.spark.read.parquet(f"{self.root}/scan_logs.parquet")
+        return read_parquet(self.spark, f"{self.root}/scan_logs.parquet",
+                            schema_ddl(SCAN_LOGS_SCHEMA))
 
 
 class DeltaTables:
@@ -573,17 +640,20 @@ class DeltaTables:
         v = version
         while cat.is_delta(v):
             meta = cat.delta_meta(v)
-            chain.append((os.path.join(cat.root, v), meta["root"]))
+            chain.append((os.path.join(cat.root, v), meta))
             v = meta["parent"]
         base = cat.tables(v)
         self._base = base
         from dudb_spark.operators.ingest import apply_changes
 
         p, e = base.prefixes, base.entries
-        for dpath, droot in reversed(chain):
-            feed = spark.read.parquet(os.path.join(dpath, "delta.parquet"))
+        for dpath, meta in reversed(chain):
+            # versions written before the feed schema was recorded infer it
+            feed = read_parquet(spark, os.path.join(dpath, "delta.parquet"),
+                                meta.get("schema"))
             res = apply_changes(
-                p, e, feed, root=droot, with_summary=False, cache=False
+                p, e, feed, root=meta["root"], with_summary=False,
+                cache=False,
             )
             p, e = res.prefixes, res.entries
         self._p, self._e = p, e

@@ -201,7 +201,7 @@ def live_tables(
     could not see instead of silently skipping it."""
     from pyspark.sql import functions as F
 
-    from dudb_spark.model import PREFIXES_SCHEMA
+    from dudb_spark.model import PREFIXES_SCHEMA, driver_frame
     from dudb_spark.sources.crawler import _scan_one
 
     register(spark)
@@ -250,8 +250,8 @@ def live_tables(
         .join(n_by_parent, "path", "left")
         .withColumn("n_entries", F.coalesce("n_entries", F.lit(0)))
     )
-    prefixes = spark.createDataFrame(
-        [root_row], PREFIXES_SCHEMA
+    prefixes = driver_frame(
+        spark, [root_row], PREFIXES_SCHEMA
     ).unionByName(dir_pfx.select(*[f.name for f in PREFIXES_SCHEMA.fields]))
     if with_errors:
         return prefixes, entries, errors

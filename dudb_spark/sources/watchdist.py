@@ -62,6 +62,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dudb_spark.model import driver_frame
 from dudb_spark.sources.fsds import _DDL, _FIELDS, _WATCH_DDL
 
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
@@ -592,5 +593,6 @@ class DistributedWatcher:
 
     def diff_frame(self, rows: list[tuple]) -> DataFrame:
         """Emission tuples → the watch-feed frame ``_watch_land``
-        consumes (op + entries schema + error + gen)."""
-        return self.spark.createDataFrame(rows, _WATCH_DDL)
+        consumes (op + entries schema + error + gen), Arrow-staged so
+        the scans of ``apply_changes`` need no Python worker."""
+        return driver_frame(self.spark, rows, _WATCH_DDL)

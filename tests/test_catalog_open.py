@@ -187,3 +187,44 @@ def test_stats_load_is_job_free(spark, tmp_path, capsys):
         assert getattr(res, name).schema == inferred.schema, name
     assert res.meta["snapshot_version"] == SnapshotCatalog(
         spark, db).latest_version()
+
+
+def test_delta_and_logs_open_job_free(spark, fs_dir, tmp_path):
+    """A delta version opens its feed with the schema `write_delta`
+    recorded, and `logs()` opens the log table with the model's; neither
+    runs the footer-inference job."""
+    from datetime import datetime, timezone
+
+    from dudb_spark.model import driver_frame
+    from dudb_spark.sources.fsds import _WATCH_DDL
+
+    db = str(tmp_path / "db")
+    cat = _snapshot(spark, fs_dir, db, "bucketed")
+    now = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    feed = driver_frame(spark, [
+        ("added", "/tree", "new", "/tree/new", False, 1, 1, 0o100644, now,
+         0, 0, 1, 99, None, 0),
+    ], _WATCH_DDL)
+    cat.write_delta(feed, root="/tree")
+    cat.append_log(now, now, {"operation": "analyze", "files": 1})
+    v = cat.latest_version()
+    assert cat.delta_meta(v)["schema"]
+    fresh = SnapshotCatalog(spark, db)
+    with spark_jobs(spark) as jobs:
+        t = fresh.tables(v)
+        logs = fresh.logs()
+    assert jobs == []
+    assert t.entries.where("path = '/tree/new'").count() == 1
+    assert logs.schema == spark.read.parquet(
+        f"{db}/scan_logs.parquet").schema
+    assert logs.first()["summary"]["files"] == 1
+
+    # a delta written before the feed schema was recorded still opens
+    meta_path = os.path.join(db, v, "_delta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    old = SnapshotCatalog(spark, db).tables(v)
+    assert old.entries.where("path = '/tree/new'").count() == 1
